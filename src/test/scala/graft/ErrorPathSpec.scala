@@ -157,4 +157,17 @@ class ErrorPathSpec extends SparkSpec {
         e.getMessage.contains("audit-mode"), e.getMessage)
     } finally sys.props.remove("GRAFT_FULL_PAIRS")
   }
+
+  test("Verify.dump lists every query that failed and still dumps the rest") {
+    import org.apache.spark.sql.{DataFrame, SparkSession}
+    import org.apache.spark.sql.functions.{lit, raise_error}
+    val out = java.nio.file.Files.createTempDirectory("verify-dump")
+    val queries = Map[String, (SparkSession, String) => DataFrame](
+      "ok" -> ((s, _) => s.range(3).toDF()),
+      "raises" -> ((s, _) => s.range(3).select(raise_error(lit("planted failure")))),
+      "missing_table" -> ((s, dir) => s.read.parquet(s"$dir/no_such_table")))
+    val failed = Verify.dump(spark, out.resolve("no_sf_dir").toString, out.toString, queries)
+    assert(failed.sorted == Seq("missing_table", "raises"))
+    assert(java.nio.file.Files.exists(out.resolve("ok/_SUCCESS")))
+  }
 }
