@@ -30,16 +30,7 @@ object Verify {
         "against the wrong mirror. Unset the flag(s), or set GRAFT_AUDIT=1 " +
         "to dump anyway (audit use only — do NOT run the oracle compare).")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    org.apache.spark.sql.graft.GraftFunctions.register(spark)
+    val spark = GraftSession(s"local[$cpus]", cpus)
     val failed = dump(spark, sfDir, outDir,
       SparkEntry.queries.filter { case (name, _) => only.isEmpty || only(name) })
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -275,7 +275,7 @@ private[analytics] trait DedupOps {
     * url_norm — the shared [[OpsKernels.bucketedStateTable]] lifecycle,
     * same as the fingerprint state's. */
   private[analytics] def frontierTable(spark: SparkSession, dir: String): String =
-    bucketedStateTable(spark, s"graft_frontier_bucketed_${Tables.dirTag(dir)}", "url_norm", dir) {
+    bucketedStateTable(spark, s"graft_frontier_bucketed_${Tables.dirTag(dir)}", "url_norm", dir, 8) {
       urlNormalized(spark, dir)
         .filter(expr(urlFrontierPredSql))
         .select(col("url_norm")).distinct()
@@ -913,20 +913,13 @@ private[analytics] trait DedupOps {
       jpairLadder(corpusDocCount(spark, dir)))
 
 
-  /** Doc count memo for the ladder rung — THREE pair-state builders call
-    * [[jpairSampleThreshold]] (jaccard, banded-recall gate, containment),
-    * and each used to pay a full documents scan just to pick the rung.
-    * Fingerprint-keyed like the memo cells, so a regenerated dir
-    * recounts. Entries are one boxed long each, but the KEYS pin
-    * SparkSession references and a long-lived session that regenerates
-    * dirs appends a new entry per fingerprint — so the map is cleared by
-    * [[OpsKernels.releaseCaches]] alongside sigMemo rather than left to
-    * accumulate stale entries. */
-  private[analytics] val docCountMemo =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String, Long), java.lang.Long]
+  /** Corpus doc count for the ladder rung — THREE pair-state builders call
+    * [[jpairSampleThreshold]] (jaccard, banded-recall gate, containment).
+    * The documents table is read unfiltered, so its parquet FOOTER count
+    * is exact: no Spark job, and [[Tables.rowCount]] already memoizes it
+    * on the file's (path, mtime, length). */
   private def corpusDocCount(spark: SparkSession, dir: String): Long =
-    docCountMemo.computeIfAbsent((spark, dir, dirFingerprint(spark, dir)),
-      _ => java.lang.Long.valueOf(Tables.documents(spark, dir).count())).longValue
+    Tables.rowCount(spark, dir, "documents")
 
 
   /** The pure ladder (docs → keep-threshold of 65536), mirrored verbatim

@@ -84,14 +84,12 @@ private[analytics] trait IngestOps {
 
   /** Idempotently materialize the existing-corpus fingerprint table
     * (doc_id < 250, matching [[ddIncremental]]'s split) bucketed+sorted on
-    * fp. The table NAME carries a tag of the source dir, so the dir needs
-    * no side-channel marker and two dirs sharing one warehouse (or one
-    * SharedState serving several sessions) never delete each other's
-    * layout; a stale warehouse directory from a previous JVM (the
-    * in-memory catalog forgets tables across restarts but the files
-    * persist) is deleted before the rewrite. */
+    * fp — the shared [[OpsKernels.bucketedStateTable]] lifecycle. The
+    * table NAME carries a tag of the source dir, so two dirs sharing one
+    * warehouse (or one SharedState serving several sessions) never delete
+    * each other's layout. */
   private[analytics] def fingerprintTable(spark: SparkSession, dir: String): String =
-    bucketedStateTable(spark, s"graft_fp_bucketed_${Tables.dirTag(dir)}", "fp", dir) {
+    bucketedStateTable(spark, s"graft_fp_bucketed_${Tables.dirTag(dir)}", "fp", dir, 8) {
       Tables.documents(spark, dir)
         .filter(col("doc_id") < IncrementalSplit)
         .select(md5(col("text")).as("fp"))

@@ -1,7 +1,7 @@
 package graft.analytics
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -10,7 +10,6 @@ import org.apache.spark.sql.functions._
   * the data-sized index parameters. Split out of the monolithic LlmOps
   * object (round 15) purely for code health - every member is unchanged. */
 private[analytics] trait OpsKernels {
-  this: DedupOps => // releaseCaches clears DedupOps.docCountMemo too
 
   // --------------------------------------------------------- cache registry
 
@@ -44,9 +43,11 @@ private[analytics] trait OpsKernels {
     synchronized { tracked += f }
 
 
-  /** Unpersist every tracked frame/RDD and drop the jaccard-pair memo. Safe
-    * to call repeatedly; after a release the next query rebuilds its caches
-    * from scratch. */
+  /** Unpersist every tracked frame/RDD and clear the memo spine
+    * ([[sigMemo]]): every memoized artefact — frames, checkpointed tables
+    * and plain values such as q38's node count — is released here and
+    * nowhere else. Safe to call repeatedly; after a release the next query
+    * rebuilds its caches from scratch. */
   def releaseCaches(): Unit = synchronized {
     // Unpersisting a locally-checkpointed RDD makes its concrete class
     // logger (e.g. org.apache.spark.rdd.MapPartitionsRDD) WARN "... was
@@ -58,13 +59,6 @@ private[analytics] trait OpsKernels {
       tracked.foreach(f => try f() catch { case _: Throwable => () })
       tracked.clear()
       sigMemo.clear()
-      // Unlike sigMemo's MemoCells the doc-count entries are cheap, but
-      // their keys pin SparkSession references and regenerated dirs (new
-      // fingerprint) append forever — release them with everything else.
-      docCountMemo.clear()
-      // q38's broadcast-gate node count rides the same fingerprint spine
-      // and pins sessions the same way.
-      graft.analytics.Relational.pagerankNodeMemo.clear()
     }
   }
 
@@ -146,54 +140,6 @@ private[analytics] trait OpsKernels {
     * numerically identical to the left-folded HOF formulation AND to the
     * unrolled left-associated chain in [[dot]] used by the oracles (same
     * accumulation order from 0.0, same per-term double widening). */
-  /** ONE idempotent bucketed-state-table lifecycle, shared by the
-    * fingerprint and frontier states (previously two drifting copies):
-    * dir-tagged table name supplied by the caller, stale-warehouse
-    * cleanup (the in-memory catalog forgets tables across restarts but
-    * the files persist — and the walk stream is CLOSED, unlike the
-    * copies this replaces), single writer task at test SF (production
-    * repartitions on the bucket key instead, sized so each task writes
-    * one healthy file per bucket).
-    *
-    * Like [[memoCell]], the lifecycle is SOURCE-FINGERPRINTED: the
-    * [[dirFingerprint]] observed at build time is recorded JVM-side,
-    * and a call that observes a strictly NEWER fingerprint (the driver
-    * regenerates testdata dirs mid-session) drops and rebuilds the table
-    * instead of serving stale frontier/fingerprint state to the
-    * incremental queries. Strictly-newer, not `!=`, for the same
-    * monotonic-mtime race reason memoCell documents. The memo is keyed
-    * by TABLE NAME alone (dir-tagged, so distinct dirs never collide):
-    * sessions sharing one SharedState/catalog live in one JVM, so a
-    * session-keyed memo would miss for a sibling session and serve it
-    * the pre-regeneration table; across JVM restarts the in-memory
-    * catalog forgets the table and the build path runs anyway. */
-  private[analytics] lazy val bucketedFpMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
-
-
-  private[analytics] def bucketedStateTable(spark: SparkSession, name: String,
-      key: String, dir: String)(build: => DataFrame): String = synchronized {
-    val fp = dirFingerprint(spark, dir)
-    val stale = Option(bucketedFpMemo.get(name)).exists(_.longValue < fp)
-    if (stale || !spark.catalog.tableExists(name)) {
-      spark.sql(s"DROP TABLE IF EXISTS $name")
-      val wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
-        .stripPrefix("file:")
-      val p = java.nio.file.Paths.get(wh, name)
-      if (java.nio.file.Files.exists(p)) {
-        val walk = java.nio.file.Files.walk(p)
-        try {
-          import scala.jdk.CollectionConverters._
-          walk.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.delete)
-        } finally walk.close()
-      }
-      build.repartition(1).write.bucketBy(8, key).sortBy(key).saveAsTable(name)
-      bucketedFpMemo.put(name, java.lang.Long.valueOf(fp))
-    }
-    name
-  }
-
-
   private[graft] def dotF(a: Column, b: Column): Column =
     org.apache.spark.sql.graft.ColumnBridge.column(
       org.apache.spark.sql.graft.DotProductF(
@@ -330,18 +276,19 @@ private[analytics] trait OpsKernels {
   private[analytics] def bucketHof(e: String, pl: Int): String =
     (0 until pl).map(p => s"(CASE WHEN (${planeDotHof(e, p)}) >= 0 THEN ${1 << p} ELSE 0 END)").mkString(" + ")
 
-  /** A memoized index-table slot: `fp` is the source-data fingerprint the
-    * build observed; the lazy `df` materializes under the CELL's own
-    * monitor, so concurrent consumers of DIFFERENT memo keys never
-    * serialize behind one build (the map's per-bin lock only guards cell
-    * creation, which is cheap). `peek` exposes the frame ONLY once built —
-    * the stale-release path must never force an unbuilt cell (a failed
-    * build's cell would otherwise rebuild, possibly recursively through
-    * this very map, inside the release path). */
-  private[analytics] final class MemoCell(val fp: Long, build: () => DataFrame) {
-    @volatile private var built: DataFrame = _
-    def peek: Option[DataFrame] = Option(built)
-    lazy val df: DataFrame = { val d = build(); built = d; d }
+  /** A memoized slot: `fp` is the source-data fingerprint the build
+    * observed; the lazy `value` materializes under the CELL's own monitor,
+    * so concurrent consumers of DIFFERENT memo keys never serialize behind
+    * one build (the map's per-bin lock only guards cell creation, which is
+    * cheap). The value is usually an index frame, but any derived value
+    * (q38's node count) rides the same cell. `peek` exposes the value ONLY
+    * once built — the stale-release path must never force an unbuilt cell
+    * (a failed build's cell would otherwise rebuild, possibly recursively
+    * through this very map, inside the release path). */
+  private[analytics] final class MemoCell(val fp: Long, build: () => Any) {
+    @volatile private var built: Any = _
+    def peek: Option[Any] = Option(built)
+    lazy val value: Any = { val v = build(); built = v; v }
   }
 
   private[analytics] lazy val sigMemo =
@@ -349,15 +296,17 @@ private[analytics] trait OpsKernels {
 
 
   /** Source-data fingerprint for a testdata dir: the newest modification
-    * time across the two tables the memoized index state derives from,
-    * resolved through the Hadoop filesystem of the path (so hdfs://s3://
-    * URIs and directory-layout parquet fingerprint correctly — a plain
-    * java.io.File mtime is 0 for a URI and misses in-place part-file
-    * rewrites under a directory). A harness that REGENERATES a dir
-    * mid-session (the driver does) changes the fingerprint, so the next
-    * memo call misses and rebuilds — without this, build-once state would
-    * silently serve the old data. (`releaseCaches()` remains the bulk
-    * lifecycle: release everything when the session is done with a dir.) */
+    * time across EVERY table of [[Tables.names]]. This is the one staleness
+    * rule for derived state — [[memoCell]] and [[bucketedStateTable]] both
+    * key on it — so no artefact can outlive a regeneration of a table it
+    * was derived from. Regenerating any one table rebuilds all state of the
+    * dir; regenerations rewrite whole dirs anyway, and over-invalidation is
+    * only ever a rebuild, never a stale answer. Resolved through the Hadoop
+    * filesystem of the path (so hdfs://s3:// URIs and directory-layout
+    * parquet fingerprint correctly — a plain java.io.File mtime is 0 for a
+    * URI and misses in-place part-file rewrites under a directory).
+    * (`releaseCaches()` remains the bulk lifecycle: release everything when
+    * the session is done with a dir.) */
   private[analytics] def dirFingerprint(spark: SparkSession, dir: String): Long = {
     val conf = spark.sparkContext.hadoopConfiguration
     val key = (spark, dir)
@@ -369,8 +318,8 @@ private[analytics] trait OpsKernels {
     // Fall back to the last successfully observed value instead: unreadable
     // means "unchanged until proven otherwise".
     val computed: Option[Long] = try {
-      Some(Seq("documents.parquet", "embeddings.parquet").map { t =>
-        val p = new org.apache.hadoop.fs.Path(s"$dir/$t")
+      Some(Tables.names.map { t =>
+        val p = new org.apache.hadoop.fs.Path(s"$dir/$t.parquet")
         val fs = p.getFileSystem(conf)
         try {
           val st = fs.getFileStatus(p)
@@ -395,14 +344,14 @@ private[analytics] trait OpsKernels {
     new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), java.lang.Long]
 
 
-  /** The memo spine shared by [[memoSig]] and [[memoRaw]]: fingerprint
-    * check, stale eviction, per-key lazy build. The stale release runs
-    * OUTSIDE any map lock — it is a Spark call, and a fresh build may
-    * recursively enter this memo (the serve-PQ code table builds on the
-    * serve assignment); only cheap cell construction happens inside
-    * computeIfAbsent. */
-  private[analytics] def memoCell(spark: SparkSession, dir: String, kind: String)
-      (thunk: () => DataFrame): DataFrame = {
+  /** The memo spine shared by [[memoSig]], [[memoRaw]] and plain derived
+    * values: fingerprint check, stale eviction, per-key lazy build. The
+    * stale release runs OUTSIDE any map lock — it is a Spark call, and a
+    * fresh build may recursively enter this memo (the serve-PQ code table
+    * builds on the serve assignment); only cheap cell construction happens
+    * inside computeIfAbsent. Each `kind` always memoizes one value type. */
+  private[analytics] def memoCell[A](spark: SparkSession, dir: String, kind: String)
+      (thunk: () => A): A = {
     val key = (spark, dir, kind)
     val fp = dirFingerprint(spark, dir)
     val existing = sigMemo.get(key)
@@ -413,12 +362,15 @@ private[analytics] trait OpsKernels {
     // table other queries are using and re-insert a cell stamped with the
     // stale fp, thrashing the memo until the next call re-evicts.
     if (existing != null && existing.fp < fp && sigMemo.remove(key, existing))
-      // stale entry (dir regenerated): best-effort drop of whatever it
-      // MATERIALIZED (never force an unbuilt cell); self-tracked builds
+      // stale entry (dir regenerated): best-effort drop of whatever frame
+      // it MATERIALIZED (never force an unbuilt cell); self-tracked builds
       // keep their storage until releaseCaches, which is acceptable —
       // correctness needs only the memo MISS
-      existing.peek.foreach(d => try d.unpersist(false) catch { case _: Throwable => () })
-    sigMemo.computeIfAbsent(key, _ => new MemoCell(fp, thunk)).df
+      existing.peek.foreach {
+        case d: Dataset[_] => try d.unpersist(false) catch { case _: Throwable => () }
+        case _ => ()
+      }
+    sigMemo.computeIfAbsent(key, _ => new MemoCell(fp, thunk)).value.asInstanceOf[A]
   }
 
 
@@ -435,4 +387,47 @@ private[analytics] trait OpsKernels {
   private[analytics] def memoRaw(spark: SparkSession, dir: String, kind: String)
       (build: => DataFrame): DataFrame =
     memoCell(spark, dir, kind)(() => build)
+
+
+  /** The one lifecycle for bucketed saved-table state (the fingerprint and
+    * frontier states, the q35 fact tables): the caller supplies a
+    * dir-tagged table name, the bucket key and the bucket count. Staleness
+    * follows the [[memoCell]] rule: the [[dirFingerprint]] observed at
+    * build time is recorded JVM-side, and a call that observes a strictly
+    * NEWER one drops and rewrites the table. The record is keyed by TABLE
+    * NAME alone (dir-tagged, so distinct dirs never collide): sessions
+    * sharing one SharedState/catalog live in one JVM, so a session-keyed
+    * record would miss for a sibling session and serve it the
+    * pre-regeneration table. A rewrite also deletes the stale warehouse
+    * dir (the in-memory catalog forgets tables across restarts but the
+    * files persist). The writers repartition on the bucket key with the
+    * bucket count: Spark's repartition and bucketBy share the Murmur3
+    * hash, so each of the `buckets` writer tasks holds exactly one
+    * bucket's rows and commits one file. */
+  private[analytics] lazy val bucketedFpMemo =
+    new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]
+
+
+  private[analytics] def bucketedStateTable(spark: SparkSession, name: String,
+      key: String, dir: String, buckets: Int)(build: => DataFrame): String = synchronized {
+    val fp = dirFingerprint(spark, dir)
+    val stale = Option(bucketedFpMemo.get(name)).exists(_.longValue < fp)
+    if (stale || !spark.catalog.tableExists(name)) {
+      spark.sql(s"DROP TABLE IF EXISTS $name")
+      val wh = spark.conf.get("spark.sql.warehouse.dir", "spark-warehouse")
+        .stripPrefix("file:")
+      val p = java.nio.file.Paths.get(wh, name)
+      if (java.nio.file.Files.exists(p)) {
+        val walk = java.nio.file.Files.walk(p)
+        try {
+          import scala.jdk.CollectionConverters._
+          walk.iterator().asScala.toSeq.reverse.foreach(java.nio.file.Files.delete)
+        } finally walk.close()
+      }
+      build.repartition(buckets, col(key))
+        .write.bucketBy(buckets, key).sortBy(key).saveAsTable(name)
+      bucketedFpMemo.put(name, java.lang.Long.valueOf(fp))
+    }
+    name
+  }
 }

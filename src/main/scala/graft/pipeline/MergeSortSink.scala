@@ -1,7 +1,8 @@
 package graft.pipeline
 
+import java.nio.channels.FileChannel
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
-import java.nio.file.StandardOpenOption.{CREATE_NEW, WRITE}
+import java.nio.file.StandardOpenOption.{CREATE_NEW, READ, WRITE}
 import java.util.UUID
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
@@ -107,16 +108,27 @@ object MergeSortSink {
 
   /** Replace `target` with `body` via a temp file in the same directory and
     * an atomic rename: readers and crashes see the old file or the new one,
-    * never a truncated one. The temp file is removed when any step fails. */
+    * never a truncated one. The temp file's data is synced before the
+    * rename and the directory entry after it, so a power loss cannot
+    * reorder the rename ahead of the data. The temp file is removed when
+    * any step fails. */
   private[graft] def replaceAtomically(target: Path, body: String,
       write: (Path, String) => Unit = (p, s) => Files.writeString(p, s, CREATE_NEW, WRITE)): Unit = {
     val abs = target.toAbsolutePath
     val tmp = abs.resolveSibling(s".${abs.getFileName}.${UUID.randomUUID()}.tmp")
     try {
       write(tmp, body)
+      fsync(tmp)
       Files.move(tmp, abs, StandardCopyOption.ATOMIC_MOVE,
         StandardCopyOption.REPLACE_EXISTING)
+      fsync(abs.getParent)
     } finally Files.deleteIfExists(tmp)
+  }
+
+  /** Flush `p` (a file, or a directory's entries) to the device. */
+  private def fsync(p: Path): Unit = {
+    val ch = FileChannel.open(p, READ)
+    try ch.force(true) finally ch.close()
   }
 
   /** Distributed sink for at-scale outputs: range-partitioned global sort,
